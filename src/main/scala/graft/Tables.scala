@@ -31,17 +31,11 @@ object Tables {
     * values for those confs, or a tool that toggles them between reads
     * of the same path, sees the FIRST session's schema. That is the
     * contract this repo's single-session mains satisfy by construction;
-    * anything that deliberately varies those confs per-read (e.g.
-    * tools/EventsAB's cast-path A/B) must call [[clearSchemaCache]]
-    * around each variant or bypass [[Tables]] entirely.
+    * anything that deliberately varies those confs per-read must bypass
+    * [[Tables]].
     */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
-  /** Test/tool hook: drop every cached inferred schema so the next read
-    * of each path re-infers under the CURRENT session confs. See the
-    * conf-sensitivity note on [[schemaCache]]. */
-  private[graft] def clearSchemaCache(): Unit = schemaCache.clear()
 
   /** private[graft]: the replay stagers re-read the same immutable table
     * paths every invocation and would otherwise re-infer per read.
@@ -89,7 +83,7 @@ object Tables {
     *    wall-clock values to DuckDB's naive read under a UTC session).
     *    An explicit schema beats a `cast(ts as timestamp)` Project on the
     *    NTZ read: the cast path measured ~25-30% slower on the
-    *    events-table queries (round-8 A/B, EventsAB: a02 med 0.46s cast
+    *    events-table queries (round-8 A/B: a02 med 0.46s cast
     *    vs 0.36s native/explicit-schema) and was the real component of
     *    the round-7 a02/st05 solo regressions.
     */

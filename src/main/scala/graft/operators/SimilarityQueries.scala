@@ -608,12 +608,11 @@ object SimilarityQueries {
   val s07c_hier_knn_recall_sampled: Q = (s, dir) =>
     knnGraphRecall(s, dir, ivfKnnGraphHier(s, dir), queryMod = 5L)
 
-  /** Recall audit body (public: the ScaleProbe soak drives the sampled
-    * form at 10×/30×). `queryMod` samples the QUERY side — truth ranks
+  /** Recall audit body. `queryMod` samples the QUERY side — truth ranks
     * and graph edges are audited only for vec_id ≡ 0 mod `queryMod`;
     * the candidate/neighbor side is always the full corpus, so sampling
     * changes which queries are audited, never any query's truth. */
-  def knnGraphRecall(s: SparkSession, dir: String,
+  private def knnGraphRecall(s: SparkSession, dir: String,
       graph: DataFrame, queryMod: Long = 1L): DataFrame = {
     require(queryMod >= 1, s"queryMod must be >= 1, got $queryMod") // 0 would NULL-filter everything into a false recall-0 row
     val e = embs(s, dir)

@@ -482,8 +482,8 @@ object TextQueries {
       .select(explode(toks).as("tok"))
     // localCheckpoint: uni feeds THREE consumers (c_a join, c_b join, the
     // U total) — without the cut each one re-runs the corpus-wide token
-    // explode + count (the d08 shared-subtree discipline; PlanAudit
-    // showed three full scan+agg subtrees before the cut)
+    // explode + count (the d08 shared-subtree discipline; the plan
+    // audit showed three full scan+agg subtrees before the cut)
     val uni = tk.groupBy(col("tok")).agg(count(lit(1)).as("c")).localCheckpoint()
     val tot = uni.agg(sum(col("c")).as("u"))
     val bg = Tables.documents(s, dir)

@@ -102,14 +102,6 @@ object IndexedPbf {
     * checkpoints are not executor-loss tolerant; losing one fails the job
     * and the caller re-runs — acceptable for a bounded pruned subset.
     */
-  /** Prune accounting of the most recent [[readWaysAndDeps]] in this JVM:
-    * way-blobs scanned pass-1, node-blobs scanned pass-2, and the totals
-    * they were pruned from — consumed by `tools.IndexedDepthSoak` (judge
-    * ask r16#6: the two-pass plan had only ever run at fixture scale).
-    * Written on every call; a handful of longs. */
-  private[graft] val lastPrune =
-    new java.util.concurrent.atomic.AtomicReference[Map[String, Long]](Map.empty)
-
   def readWaysAndDeps(spark: SparkSession, path: String, wayPredicate: Column): DataFrame = {
     val idx = index(spark, path)
 
@@ -167,11 +159,6 @@ object IndexedPbf {
 
     // Pass 2: pruned node blobs, node groups only, exact id semi-join.
     val nodeSpans = neededOrdinals.map(i => nodeBlobs(i).span).toSeq
-    lastPrune.set(Map(
-      "way_blobs_scanned" -> wayBlobs.size.toLong,
-      "data_blobs_total" -> idx.size.toLong,
-      "node_blobs_scanned" -> nodeSpans.size.toLong,
-      "node_blobs_total" -> nodeBlobs.size.toLong))
     val nodes =
       if (nodeSpans.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], OsmSchema.schema)

@@ -13,9 +13,9 @@ object GraftListenerBus {
   /** Blocks until every queued listener event has been delivered (or the
     * timeout lapses — a bounded wait, never a hang). Spark's
     * `waitUntilEmpty(long)` THROWS `TimeoutException` when the timeout
-    * lapses; callers here sit in `finally` blocks (ScaleProbe.measure,
-    * ScaleSoak), where a throw would mask the body's real exception and
-    * skip `removeSparkListener` — so a lapse is logged and swallowed,
+    * lapses; a caller may sit in a `finally` block, where a throw would
+    * mask the body's real exception and skip `removeSparkListener` — so
+    * a lapse is logged and swallowed,
     * making the wait genuinely non-throwing as documented. A lapsed
     * drain means the metric read MAY be short; returns `false` in that
     * case so callers can record `listener_drained` next to the numbers

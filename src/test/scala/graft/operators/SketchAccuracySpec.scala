@@ -132,6 +132,31 @@ class SketchAccuracySpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(r.getBoolean(2), s"x03 out of envelope: $r")
     }
   }
+
+  test("x01: a flag whose keys are all null keeps its row, with count 0") {
+    // A: both keys present; S: every suppkey null; P: every partkey
+    // null; B: both null; and a null flag. countDistinct (and the DuckDB
+    // oracle's count(DISTINCT ...)) reports every group, 0 where all of a
+    // key's values are null.
+    import spark.implicits._
+    val fixture = java.nio.file.Files.createTempDirectory("x01-null-groups")
+    try {
+      Seq[(Option[String], Option[Long], Option[Long])](
+        (Some("A"), Some(1L), Some(10L)), (Some("A"), Some(2L), Some(10L)),
+        (Some("A"), Some(2L), Some(11L)),
+        (Some("S"), None, Some(12L)), (Some("S"), None, Some(13L)),
+        (Some("P"), Some(3L), None), (Some("P"), Some(4L), None),
+        (Some("B"), None, None),
+        (None, Some(5L), Some(14L)))
+        .toDF("l_returnflag", "l_suppkey", "l_partkey")
+        .write.parquet(s"$fixture/lineitem.parquet")
+      val got = ScaleQueries.x01_approx_distinct(spark, fixture.toString)
+        .collect().map(_.toSeq.mkString("|")).toSet
+      assert(got === Set("A|2|2|true|true", "S|0|2|true|true",
+        "P|2|0|true|true", "B|0|0|true|true", "null|1|1|true|true"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(fixture.toFile)
+  }
+
   test("x04: shard-merged HLL equals the whole-corpus sketch; bounds hold") {
     // merge associativity: union of per-shard sketches must estimate the
     // same cardinality as one sketch over the whole stream

@@ -361,4 +361,30 @@ class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
       .orderBy("bucket_start", "event_type").collect().toSeq
     assert(after === before)
   }
+
+  test("st20-st23: a staging failure leaves no scratch target dir behind") {
+    // one readable part file (schema inference succeeds) plus a corrupt
+    // one, so Checkpoints.stage's eager scan is what throws
+    val dir = writeEvents(Seq((1L, ts("2026-01-01 08:00:00"), 10L, "view", 1.0)))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(dir, "events.parquet", "part-99999-corrupt.parquet"),
+      "not a parquet file".getBytes("UTF-8"))
+    val root = {
+      val probe = graft.Scratch.tempDir("graft-scratch-root")
+      java.nio.file.Files.delete(probe)
+      probe.getParent.toFile
+    }
+    def targets(entry: String): Set[String] =
+      Option(root.list()).toSet.flatten.filter(_.startsWith(s"graft-$entry-target"))
+    Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)](
+      "st20" -> StreamReplay.st20_time_travel_read,
+      "st21" -> StreamReplay.st21_cdc_apply_pruned,
+      "st22" -> StreamReplay.st22_version_diff,
+      "st23" -> StreamReplay.st23_cdc_delete).foreach { case (entry, q) =>
+      val before = targets(entry)
+      intercept[Exception](q(spark, dir))
+      assert(targets(entry) -- before === Set.empty[String],
+        s"$entry leaked its scratch target dir")
+    }
+  }
 }
