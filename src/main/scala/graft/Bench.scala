@@ -531,7 +531,7 @@ object Bench {
       .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$shortQs,"sf":"$sfDir"$extra$calibShort$driftShort$commonTotals,"full_names_and_diff":"BENCH_DETAIL.json"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$shortQs,"sf":"$sfDir"$extra$calibShort$driftShort$commonTotals,"full_names_and_diff":"BENCH_DETAIL.json"}"""
     val parsed = parsedLine(total, cur, sfDir, soloSysSamples)
     // The driver records only the LAST 2000 chars of combined output, and
     // when it runs through sbt the `[success]` trailer lands AFTER
@@ -596,35 +596,43 @@ object Bench {
     * 2000 chars of output, and sbt's `[success]` trailer lands after it. */
   private[graft] val ParsedLineMaxChars = 1900
 
-  /** The PARSED line (printed last): per-query map at 2 decimals under
-    * short code keys and a minimal envelope — at 166 entries the
-    * 3-decimal map alone is ~2010 chars, so the full line (~2.4 KB) can
-    * never sit whole inside the runner's 2000-char tail. 2dp only
-    * coarsens entries under ~0.1 s (scheduling constants, drift-bound
-    * anyway); full precision lives in BENCH_SUMMARY/BENCH_DETAIL. The
-    * drift aggregates ride under SHORT keys ("sysmed"/"sysmax" =
-    * solo_sys_pct_median/max in BENCH_DETAIL) and are the first thing
-    * dropped when the line would pass [[ParsedLineMaxChars]]; a line
-    * still over the cap is returned with a warning through `warn`. */
+  /** The PARSED line (printed last): per-query map under short code
+    * keys and a minimal envelope — at 166 entries the 3-decimal map alone
+    * is ~2010 chars, so the full line (~2.4 KB) can never sit whole
+    * inside the runner's 2000-char tail. Values print at 2 decimals with
+    * trailing zeros trimmed (0.30 → 0.3: lossless). 2dp only coarsens
+    * entries under ~0.1 s (scheduling constants, drift-bound anyway);
+    * full precision lives in BENCH_SUMMARY/BENCH_DETAIL. Past
+    * [[ParsedLineMaxChars]] the line degrades in two steps: first the
+    * drift aggregates go (SHORT keys "sysmed"/"sysmax" =
+    * solo_sys_pct_median/max in BENCH_DETAIL), then entries of 1 s and
+    * more print at 1 decimal (≤5% rounding; the r20 map needs this step:
+    * 1,930 → 1,877 chars). A line still over the cap is returned with a
+    * warning through `warn`. Every step keeps valid JSON and the same
+    * query keys. */
   private[graft] def parsedLine(total: Double, times: Map[String, Double], sfDir: String,
       soloSysSorted: Seq[Double],
       warn: String => Unit = System.err.println): String = {
-    val qs = times.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + f"$v%.2f" }
-      .mkString("{", ",", "}")
-    def line(drift: String): String =
+    def num(v: Double, decimals: Int): String = {
+      val s = s"%.${decimals}f".format(v)
+      if (s.contains('.')) s.reverse.dropWhile(_ == '0').dropWhile(_ == '.').reverse else s
+    }
+    def line(decimalsFrom1s: Int, drift: String): String = {
+      val qs = times.toSeq.sortBy(_._1).map { case (k, v) =>
+        "\"" + k.takeWhile(_ != '_') + "\":" + num(v, if (v >= 1.0) decimalsFrom1s else 2)
+      }.mkString("{", ",", "}")
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir"$drift}"""
-    val withDrift = line(
+    }
+    val drift =
       if (soloSysSorted.isEmpty) ""
       else s""","sysmed":${soloSysSorted(soloSysSorted.size / 2)}""" +
-        s""","sysmax":${soloSysSorted.last}""")
-    if (withDrift.length <= ParsedLineMaxChars) withDrift
-    else {
-      val lean = line("")
-      if (lean.length > ParsedLineMaxChars)
-        warn(s"[bench] parsed stdout line is ${lean.length} chars, over the " +
-          s"$ParsedLineMaxChars-char cap: a 2000-char output tail may clip it")
-      lean
+        s""","sysmax":${soloSysSorted.last}"""
+    val steps = Seq((2, drift), (2, ""), (1, "")).view.map { case (d, k) => line(d, k) }
+    steps.find(_.length <= ParsedLineMaxChars).getOrElse {
+      val last = steps.last
+      warn(s"[bench] parsed stdout line is ${last.length} chars, over the " +
+        s"$ParsedLineMaxChars-char cap: a 2000-char output tail may clip it")
+      last
     }
   }
 }

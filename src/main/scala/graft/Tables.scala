@@ -12,46 +12,63 @@ import org.apache.spark.sql.functions._
   * must carry the query's predicates/projection.
   */
 object Tables {
-  /** Process-level inferred-schema cache, keyed by path. Schema inference
-    * is driver-side work Spark repeats on EVERY `spark.read.parquet` —
-    * measured ~80-120ms per construction on this box (file listing +
-    * footer job), which a 100-query sweep pays hundreds of times over on
-    * identical immutable inputs. First read of a path infers and caches;
-    * later reads construct with the explicit schema, skipping inference
-    * entirely. The cached schema is exactly what inference would return —
-    * plans are unchanged. Staleness contract: testdata files are immutable
-    * within a process lifetime (they are regenerated only between driver
-    * rounds, i.e. between JVMs).
+  /** Process-level inferred-schema cache: path → (fingerprint, schema).
+    * Schema inference is driver-side work Spark repeats on EVERY
+    * `spark.read.parquet` — measured ~80-120ms per construction (file
+    * listing + footer job), which a 100-query sweep pays hundreds of
+    * times over on identical inputs. First read of a path
+    * infers and caches; later reads construct with the explicit schema,
+    * skipping inference entirely. The cached schema is exactly what
+    * inference would return — plans are unchanged.
     *
-    * CONF-SENSITIVITY: the key is the path only, but what inference
-    * returns depends on the session confs it ran under —
-    * `spark.sql.parquet.inferTimestampNTZ.enabled` (NTZ vs session
-    * timestamps) and `spark.sql.legacy.parquet.nanosAsLong` (ns columns
-    * as Long vs hard error). A second in-process session with different
-    * values for those confs, or a tool that toggles them between reads
-    * of the same path, sees the FIRST session's schema. That is the
-    * contract this repo's single-session mains satisfy by construction;
-    * anything that deliberately varies those confs per-read must bypass
-    * [[Tables]].
+    * Staleness: an entry is served only while the path's [[fingerprint]]
+    * is unchanged, and a changed fingerprint REPLACES the path's entry —
+    * one entry per path, however often it is rewritten. The fingerprint
+    * sees the root and its direct children; a rewrite below a nested
+    * (partition) dir that keeps every direct child's size and mtime is
+    * out of contract — none of this repo's writers produce one.
+    *
+    * CONF-SENSITIVITY: what inference returns depends on the session
+    * confs it ran under — `spark.sql.parquet.inferTimestampNTZ.enabled`
+    * (NTZ vs session timestamps) and `spark.sql.legacy.parquet.nanosAsLong`
+    * (ns columns as Long vs hard error). A second in-process session with
+    * different values for those confs, or a tool that toggles them
+    * between reads of the same path, sees the FIRST session's schema.
+    * That is the contract this repo's single-session mains satisfy by
+    * construction; anything that deliberately varies those confs per-read
+    * must bypass [[Tables]].
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, org.apache.spark.sql.types.StructType)]()
 
-  /** private[graft]: the replay stagers re-read the same immutable table
-    * paths every invocation and would otherwise re-infer per read.
-    * The cache key carries the root's (mtime, length) so the immutability
-    * assumption is ENFORCED, not just documented (r19 advisor): a path
-    * rewritten in-process (new part files → the dir's mtime changes)
-    * re-infers instead of silently reading with the stale schema. One
-    * stat() per read — noise next to the ~80-120ms inference it skips.
-    * (A nested rewrite that leaves the root dir's own mtime unchanged is
-    * out of contract — none of this repo's writers produce one.) */
-  private[graft] def cached(s: SparkSession, path: String): DataFrame = {
+  /** A table path's content fingerprint: the root's own mtime and
+    * length plus the sorted (name, length, mtime) of its direct
+    * children. One non-recursive listing, no footer reads. A directory's
+    * own mtime and length do not change when a part file is rewritten
+    * in place; its children's do. */
+  private def fingerprint(path: String): String = {
     val f = new java.io.File(path)
-    val key = s"$path@${f.lastModified}:${f.length}"
-    val sch = schemaCache.computeIfAbsent(key, _ => s.read.parquet(path).schema)
-    s.read.schema(sch).parquet(path)
+    val children = Option(f.listFiles()).toSeq.flatten.sortBy(_.getName)
+      .map(c => s"${c.getName}:${c.length}:${c.lastModified}")
+    (s"${f.lastModified}:${f.length}" +: children).mkString("|")
   }
+
+  private def schemaOf(s: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
+    val fp = fingerprint(path)
+    schemaCache.compute(path, (_, old) =>
+      if (old != null && old._1 == fp) old else (fp, s.read.parquet(path).schema))._2
+  }
+
+  /** Paths the schema cache holds an entry for (specs pin one per path). */
+  private[graft] def schemaCachePaths: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    schemaCache.keySet.asScala.toSet
+  }
+
+  /** private[graft]: the replay stagers re-read the same table paths
+    * every invocation and would otherwise re-infer per read. */
+  private[graft] def cached(s: SparkSession, path: String): DataFrame =
+    s.read.schema(schemaOf(s, path)).parquet(path)
 
   def region(s: SparkSession, dir: String): DataFrame    = cached(s, s"$dir/region.parquet")
   def nation(s: SparkSession, dir: String): DataFrame    = cached(s, s"$dir/nation.parquet")
@@ -113,7 +130,7 @@ object Tables {
     // demand it unconditionally, translate Spark's error into the
     // actionable contract when it does bite.
     val inferred =
-      try schemaCache.computeIfAbsent(path, p => s.read.parquet(p).schema)
+      try schemaOf(s, path)
       catch {
         case e: Throwable if {
           val m = String.valueOf(e.getMessage)

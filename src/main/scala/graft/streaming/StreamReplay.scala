@@ -8,28 +8,35 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
-/** Driver-checkable STREAMING correctness entries: replay the batch
-  * `events` table through Spark's FILE streaming source into the stateful
-  * streaming operators and return the settled result as a DataFrame — so
-  * the DuckDB oracle gate exercises the streaming code paths themselves,
-  * not just their batch twins (a05/a06 prove the semantics; these prove
-  * the `flatMapGroupsWithState` implementations compute them).
+/** Driver-checkable STREAMING correctness entries: replay a batch table
+  * (`events`; `documents` for the ingest-gate entries) through Spark's
+  * FILE streaming source into the stateful streaming operators and return
+  * the settled result as a DataFrame — so the DuckDB oracle gate
+  * exercises the streaming code paths themselves, not just their batch
+  * twins (a05/a06 prove the semantics; these prove the
+  * `flatMapGroupsWithState` implementations compute them).
+  *
+  * One harness, [[replayRaw]], drives every entry. Its three inputs are
+  * the [[Source]] (which table, its chunk key, and what the transform
+  * receives), the settle rule (`processAllAvailable`, or `awaitRows` for
+  * processing-time state that never quiesces) and the [[Sink]] (memory
+  * table, a custom `foreachBatch`, or the persisted state).
   *
   * Replay protocol (the standard event-time test harness):
-  *   1. stage the events table's parquet file(s) into a scratch dir and
-  *      start `readStream.format("parquet")` over it with
-  *      `maxFilesPerTrigger` = the staged file count — the whole table
-  *      lands in micro-batch 1. The watermark only advances between
-  *      batches, so nothing is ever late-dropped and each user's full
-  *      history reaches one state invocation (the documented batch-parity
-  *      case of the streaming operators). The `st03b`/`st07b` gate
-  *      entries instead stage the table as 8 event-time-RANGED chunk
-  *      files consumed one per micro-batch (`chunks` in [[replayRaw]]) —
-  *      the cross-batch state-carry case, same oracle hashes;
-  *   2. append two tiny far-future watermark TICK FILES (one row each) —
-  *      the first advances the watermark past every window close, the
-  *      second gives Spark a batch in which those event-time timeouts
-  *      actually fire.
+  *   1. stage the table's parquet file(s) into a scratch dir and start
+  *      `readStream.format("parquet")` over it with `maxFilesPerTrigger`
+  *      = the staged file count — the whole table lands in micro-batch 1.
+  *      The watermark only advances between batches, so nothing is ever
+  *      late-dropped and each user's full history reaches one state
+  *      invocation (the documented batch-parity case of the streaming
+  *      operators). The `*b` gate entries instead stage the table as
+  *      key-RANGED chunk files consumed one per micro-batch (`chunks` in
+  *      [[replayRaw]]) — the cross-batch state-carry case, same oracle
+  *      hashes;
+  *   2. on events, append two tiny far-future watermark TICK FILES (one
+  *      row each) — the first advances the watermark past every window
+  *      close, the second gives Spark a batch in which those event-time
+  *      timeouts actually fire.
   *
   * This is the production replay shape scaled down: a file-source stream
   * with bounded files-per-trigger is exactly how a 100 TB events corpus
@@ -91,14 +98,16 @@ object StreamReplay {
   /** Wall breakdown of the MOST RECENT replay in this JVM — the
     * itemization of the "streaming protocol cost" that has dominated the
     * bench sweep since r13 without a number (judge ask r16#5). Written by
-    * [[replayDocs]]/[[replayRaw]] on every run (cost: a handful of
-    * nanoTime reads), consumed by `graft.Bench`, which snapshots this
-    * after each solo entry run (the r19 floor split is recorded in
+    * [[replayRaw]] on every run (cost: a handful of nanoTime reads),
+    * consumed by `graft.Bench`, which snapshots this after each solo
+    * entry run (the r19 floor split is recorded in
     * SOAK_r19_replayfloor.json). Keys: harness phases
-    * (stage/start/process/extract, plus the settle-poll loop's sleep and
-    * sink-count components where one runs) and per-batch engine duration
-    * sums from the query's own progress history (addBatch,
-    * triggerExecution, commitOffsets, walCommit, ...). */
+    * (stage/start/process/extract), per-batch engine duration sums from
+    * the query's own progress history (addBatch, triggerExecution,
+    * commitOffsets, walCommit, ...), and — only when the `awaitRows`
+    * settle loop ran — its `poll_*` and `settle_*` fields
+    * ([[awaitSinkRows]]); `settle_signal` is absent after a
+    * `processAllAvailable` settle. */
   private[graft] val lastFloor =
     new java.util.concurrent.atomic.AtomicReference[Map[String, Double]](Map.empty)
 
@@ -183,14 +192,86 @@ object StreamReplay {
                                                lateDropped: Long = 0L,
                                                dupDropped: Long = 0L)
 
-  /** Run `transformed(stream)` over a full-table replay of events and
-    * return the memory sink's settled contents, detached from the sink
-    * (localCheckpoint) so concurrent/later runs can't disturb it. */
-  private def replay(s: SparkSession, dir: String,
-                     mode: OutputMode,
-                     transform: org.apache.spark.sql.Dataset[EventStreams.Event] => DataFrame,
-                     chunks: Int = 1, ticks: Boolean = true): DataFrame =
-    replayRaw(s, dir, mode, transform, ticks = ticks, chunks = chunks).df
+  /** What a replay streams: the `<table>.parquet` under the replay's
+    * dir, the key its multi-batch staging range-partitions on, and how
+    * the raw file stream becomes the transform's input. */
+  private[streaming] sealed abstract class Source(val table: String, val key: String) {
+    /** The file-source schema, given a staged data file's footer schema. */
+    def fileSchema(footer: StructType): StructType = footer
+    /** The transform applied to the raw file stream. */
+    def stream(raw: DataFrame): DataFrame
+    /** Run the watermark-tick protocol (see [[replayRaw]]). */
+    def ticks: Boolean = false
+  }
+
+  /** The events table, chunked on `ts`, typed as [[EventStreams.Event]].
+    * `ticks` runs the watermark-tick protocol (see [[replayRaw]]). It
+    * costs a max-event-time job plus two micro-batches, so operators
+    * with nothing to close on the watermark skip it; `maxTs` is 0
+    * without it. */
+  private[streaming] final case class Events(
+      transform: org.apache.spark.sql.Dataset[EventStreams.Event] => DataFrame,
+      override val ticks: Boolean = true) extends Source("events", "ts") {
+    // Read from a staged file, NOT the source dir: a hive-partitioned
+    // source derives partition columns from directory names, which the
+    // flattened staging drops — a consumed column living only in the
+    // partitioning would silently null-fill under a dir-derived schema.
+    // Fail fast instead. Zoneless timestamp[us] data files infer as
+    // TimestampNTZType; the file-source schema instead DECLARES ts
+    // TimestampType, so the scan surfaces raw micros as session-UTC
+    // timestamps directly — no per-micro-batch cast Project (the cast
+    // path measured ~20-25% slower on st05; see the Tables.events
+    // scaladoc's round-8 A/B).
+    override def fileSchema(footer: StructType): StructType = {
+      val missing = Seq("event_id", "ts", "user_id", "event_type", "value")
+        .filterNot(footer.fieldNames.contains)
+      require(missing.isEmpty,
+        s"staged event data files lack consumed column(s) ${missing.mkString(", ")}" +
+          " — is the source hive-partitioned by a consumed column?")
+      StructType(footer.map {
+        case f if f.name == "ts" && f.dataType == TimestampNTZType =>
+          f.copy(dataType = TimestampType)
+        case f => f
+      })
+    }
+    // ts int64 ns (the older sf tables) converts to µs exactly as
+    // Tables.events does
+    def stream(raw: DataFrame): DataFrame = {
+      import raw.sparkSession.implicits._
+      val converted = raw.schema("ts").dataType match {
+        case LongType => raw.withColumn("ts", timestamp_micros(expr("(ts - pmod(ts, 1000)) div 1000")))
+        case _ => raw // TimestampType — NTZ already re-declared above
+      }
+      transform(converted
+        .select(col("event_id"), col("ts"), col("user_id"),
+          col("event_type"), col("value"))
+        .as[EventStreams.Event])
+    }
+  }
+
+  /** The documents table, chunked on `doc_id`, passed through untyped.
+    * No event time: the ingest-gate processors run `TimeMode.None` and
+    * emit per batch, so there is nothing for a tick to close. */
+  private[streaming] final case class Documents(transform: DataFrame => DataFrame)
+      extends Source("documents", "doc_id") {
+    def stream(raw: DataFrame): DataFrame = transform(raw)
+  }
+
+  /** Where a replay's output goes, and what [[replayRaw]] returns as `df`. */
+  private[streaming] sealed trait Sink
+  private[streaming] object Sink {
+    /** The in-memory table; `df` is its settled rows. */
+    case object Memory extends Sink
+    /** A custom `foreachBatch` body (st09's idempotent parquet sink,
+      * st17's changeset apply); `df` is empty — the caller reads its own
+      * target. */
+    final case class ForeachBatch(fn: (DataFrame, Long) => Unit) extends Sink
+    /** The in-memory table, but the entry under test is the persisted
+      * STATE: `df` is `extract(session, checkpoint)`, read after the
+      * query stops so the state source sees a quiesced checkpoint at its
+      * last committed batch. */
+    final case class StateOf(extract: (SparkSession, String) => DataFrame) extends Sink
+  }
 
   /** Writes one far-future tick event as a single-file parquet batch into
     * the staged stream dir, schema-identical to the real files (ts stays
@@ -224,40 +305,12 @@ object StreamReplay {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
 
-  /** [[replay]] plus the max real event-time millis — for callers that
-    * must separate real-data results from the watermark ticks' own
-    * output (operators without an event-type filter aggregate the tick
-    * rows too; their far-future buckets filter out on `> maxTs`).
-    *
-    * `chunks > 1` switches the staging from copy-the-files to a
-    * MULTI-BATCH replay: the table is range-partitioned by event time
-    * into `chunks` time-ordered files (chunk k's min ts >= chunk k-1's
-    * max ts), staged with strictly increasing modification times —
-    * `FileStreamSource` orders new files by mod time ascending — and
-    * consumed with `maxFilesPerTrigger=1`, one chunk per micro-batch. The
-    * watermark then genuinely advances BETWEEN batches, exercising
-    * cross-batch state carry (session extension, timeout re-arming)
-    * rather than the batch-parity case; because the split respects event
-    * time, no row is ever watermark-late and the settled result is
-    * hash-identical to the single-batch replay's oracle.
-    *
-    * `copiesAsBatches` (with `stageCopies > 1`) feeds each staged COPY
-    * of the table as its own micro-batch (`maxFilesPerTrigger` = the
-    * per-copy file count; copies are staged copy-major with strictly
-    * increasing mtimes, so `FileStreamSource`'s mtime-ordered pickup
-    * yields copy k exactly in batch k+1) — the cross-batch dedup
-    * variant's shape: batch 1 populates the key state, batch 2 re-sends
-    * every row so each id must probe state ACROSS the batch boundary.
-    *
-    * `stateStore` defaults to the process-level [[stateStoreOverride]];
-    * specs thread an explicit value instead of mutating the global
-    * system property (which would race under parallel suites). */
   /** Recursive data-file listing of a parquet table path (file or
-    * dir) — shared by both replay stagers: a partitioned/nested table
-    * dir is a valid batch-read layout, and a non-recursive listing
-    * would silently stage a SUBSET of a mixed layout (partial corpus
-    * into the stream, full corpus into the oracle). Staging flattens
-    * the names — partition-dir values are not consumed by any replay. */
+    * dir): a partitioned/nested table dir is a valid batch-read layout,
+    * and a non-recursive listing would silently stage a SUBSET of a
+    * mixed layout (partial corpus into the stream, full corpus into the
+    * oracle). Staging flattens the names — partition-dir values are not
+    * consumed by any replay. */
   private def listParquetFiles(src: java.io.File): Seq[java.io.File] =
     if (src.isDirectory) {
       val walk = Files.walk(src.toPath)
@@ -270,26 +323,26 @@ object StreamReplay {
       } finally walk.close()
     } else Seq(src)
 
-  /** MULTI-BATCH chunk staging, shared by both replays: range-partition
-    * the table by `key` and write one file per range — file k's min key
-    * >= file k-1's max key, so feeding them in order is a valid
-    * key-ordered replay (nothing is ever watermark-late on a ts key).
-    * One distributed sort; no driver materialization; part index =
-    * range index = delivery order. */
+  /** MULTI-BATCH chunk staging: range-partition the table by the
+    * source's key and write one file per range — file k's min key >=
+    * file k-1's max key, so feeding them in order is a valid key-ordered
+    * replay (nothing is ever watermark-late on a ts key). One distributed
+    * sort; no driver materialization; part index = range index =
+    * delivery order. */
   private def stageChunks(s: SparkSession, base: Path, stage: Path,
-      srcPath: String, chunks: Int, key: String, what: String): Seq[Path] = {
+      srcPath: String, chunks: Int, source: Source): Seq[Path] = {
     val tmp = Files.createTempDirectory(base, "chunkwrite")
-    // cached-schema read (Tables.cached): the source path is immutable
-    // within a process and every chunked replay re-stages it — a raw
-    // read would re-infer the schema per entry invocation
+    // cached-schema read (Tables.cached): every chunked replay re-stages
+    // the same source path — a raw read would re-infer the schema per
+    // entry invocation
     graft.Tables.cached(s, srcPath)
-      .repartitionByRange(chunks, col(key))
+      .repartitionByRange(chunks, col(source.key))
       .write.mode("overwrite").parquet(tmp.toString)
     val parts = tmp.toFile.listFiles()
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
       .sortBy(_.getName)
     require(parts.length > 1,
-      s"multi-batch $what replay needs >1 chunk files, got ${parts.length}")
+      s"multi-batch ${source.table} replay needs >1 chunk files, got ${parts.length}")
     parts.toSeq.zipWithIndex.map { case (f, i) =>
       Files.move(f.toPath, stage.resolve(f"chunk-$i%05d.parquet"))
     }
@@ -307,24 +360,49 @@ object StreamReplay {
     }
   }
 
+  /** The replay harness behind every `st*` entry: stage `source`'s table
+    * under `dir` into a scratch dir, stream it through `source`'s
+    * transform into `sink` on an isolated session, settle, audit the
+    * ingest against the staged files, and return the result. The
+    * scratch (staged input + checkpoint) is deleted on every path.
+    *
+    * Staging. By default the table's files are copied in and consumed as
+    * one micro-batch. `chunks > 1` switches to a MULTI-BATCH replay: the
+    * table is staged as `chunks` key-ranged files ([[stageChunks]],
+    * delivery order pinned by [[pinMtimes]]) consumed one per
+    * micro-batch. On events the watermark then genuinely advances
+    * between batches, exercising cross-batch state carry (session
+    * extension, timeout re-arming); the split respects event time, so no
+    * row is ever watermark-late and the result is hash-identical to the
+    * single-batch replay's. On documents, lower doc_ids never arrive
+    * later (the replay leg of the ingest gate's min-owner rule).
+    *
+    * `stageCopies > 1` stages the whole table N times into the same
+    * batch — every row becomes an exact duplicate, which is how the
+    * dedup entry exercises a state HIT for every id (st06).
+    * `copiesAsBatches` instead feeds each COPY as its own micro-batch
+    * (`maxFilesPerTrigger` = the per-copy file count; copies are staged
+    * copy-major with strictly increasing mtimes, so copy k lands exactly
+    * in batch k+1) — the cross-batch dedup variant's shape.
+    *
+    * Settle rule. `processAllAvailable` by default; `awaitRows = Some(n)`
+    * instead polls until the sink holds `n` rows ([[awaitSinkRows]]) —
+    * processing-time `transformWithState` never quiesces.
+    *
+    * `stateStore` defaults to the process-level [[stateStoreOverride]];
+    * specs thread an explicit value instead of mutating the global
+    * system property (which would race under parallel suites).
+    * `multiScan` skips the [[reconcileStagedRows]] check. */
   private[streaming] def replayRaw(outer: SparkSession, dir: String,
-                     mode: OutputMode,
-                     transform: org.apache.spark.sql.Dataset[EventStreams.Event] => DataFrame,
-                     ticks: Boolean = true,
-                     stageCopies: Int = 1,
-                     chunks: Int = 1,
-                     copiesAsBatches: Boolean = false,
-                     stateStore: Option[String] = None,
-                     parquetSinkDir: Option[String] = None,
-                     foreachBatchFn: Option[(DataFrame, Long) => Unit] = None,
-                     multiScan: Boolean = false): Replayed = {
+      mode: OutputMode, source: Source, sink: Sink = Sink.Memory,
+      chunks: Int = 1, stageCopies: Int = 1, copiesAsBatches: Boolean = false,
+      stateStore: Option[String] = None, awaitRows: Option[Long] = None,
+      multiScan: Boolean = false): Replayed = {
     val f0 = System.nanoTime() // floor itemization — see lastFloor
     require(chunks == 1 || stageCopies == 1,
       "chunked staging and stageCopies are mutually exclusive")
     require(!copiesAsBatches || stageCopies > 1,
       "copiesAsBatches requires stageCopies > 1")
-    require(foreachBatchFn.isEmpty || parquetSinkDir.isEmpty,
-      "foreachBatchFn and parquetSinkDir are mutually exclusive sinks")
     // an isolated session (shared context, own SQLConf/catalog):
     // stateful streaming cost is dominated by per-partition state-store
     // commits (shuffle.partitions × batches), so the replay scopes a
@@ -342,7 +420,7 @@ object StreamReplay {
     // the override a run was launched under.
     (stateStore.fold(stateStoreOverride)(n => resolveStateStore(Some(n))))
       .foreach(s.conf.set("spark.sql.streaming.stateStore.providerClass", _))
-    import s.implicits._
+    val ticks = source.ticks
 
     // the one driver-side scalar: max real event time, via a distributed
     // aggregate (NOT a table collect); null on an empty table → epoch 0,
@@ -359,82 +437,42 @@ object StreamReplay {
       else Option(graft.Tables.events(s, dir).agg(max(col("ts")))
         .head().getTimestamp(0)).map(_.getTime).getOrElse(0L)
 
-    val base = graft.Scratch.tempDir("graftreplay")
-    val stage = Files.createDirectory(base.resolve("in"))
-    val ckpt = base.resolve("ckpt").toString
-    val src = new java.io.File(s"$dir/events.parquet")
+    val src = new java.io.File(s"$dir/${source.table}.parquet")
     val srcFiles: Seq[java.io.File] = listParquetFiles(src)
     require(srcFiles.nonEmpty, s"no parquet files found under $src")
-    val sink = s"graft_replay_${sinkId.incrementAndGet()}"
+    val base = graft.Scratch.tempDir(s"graftreplay-${source.table}")
+    val stage = Files.createDirectory(base.resolve("in"))
+    val ckpt = base.resolve("ckpt").toString
+    val sinkName = s"graft_replay_${sinkId.incrementAndGet()}"
     try {
       val stagedFiles: Seq[Path] =
         if (chunks > 1)
-          stageChunks(s, base, stage, src.getAbsolutePath, chunks, "ts", "event")
-        else {
-          // stageCopies > 1 stages the whole table N times into the same
-          // batch — every row becomes an exact duplicate, which is how
-          // the dedup entry exercises a state HIT for every id (st06)
+          stageChunks(s, base, stage, src.getAbsolutePath, chunks, source)
+        else
           (for { c <- 0 until stageCopies; (f, i) <- srcFiles.zipWithIndex }
             yield Files.copy(f.toPath, stage.resolve(f"real-$c%02d-$i%05d.parquet"))).toSeq
-        }
       pinMtimes(stagedFiles)
-      // file-source schema = the staged DATA-FILE footer schema (ts int64
-      // ns for the sf tables); the ns→µs conversion below mirrors
-      // Tables.events exactly. Read a staged file, NOT the source dir: a
-      // hive-partitioned source derives partition columns from directory
-      // names, which the flattened staging drops — a consumed column
-      // living only in the partitioning would silently null-fill under a
-      // dir-derived schema. Fail fast instead.
-      // zoneless timestamp[us] data files infer as TimestampNTZType; the
-      // file-source schema instead DECLARES ts TimestampType, so the scan
-      // surfaces raw micros as session-UTC timestamps directly — no
-      // per-micro-batch cast Project (the cast path measured ~20-25%
-      // slower on st05; see the Tables.events scaladoc's round-8 A/B)
-      val fileSchema = {
-        val inferred = s.read.parquet(stagedFiles.head.toString).schema
-        StructType(inferred.map {
-          case f if f.name == "ts" && f.dataType == TimestampNTZType =>
-            f.copy(dataType = TimestampType)
-          case f => f
-        })
-      }
-      val missing = Seq("event_id", "ts", "user_id", "event_type", "value")
-        .filterNot(fileSchema.fieldNames.contains)
-      require(missing.isEmpty,
-        s"staged event data files lack consumed column(s) ${missing.mkString(", ")}" +
-          " — is the source hive-partitioned by a consumed column?")
+      val fileSchema = source.fileSchema(s.read.parquet(stagedFiles.head.toString).schema)
       val raw = s.readStream.schema(fileSchema)
         .option("maxFilesPerTrigger",
           if (chunks > 1) "1"
           else if (copiesAsBatches) srcFiles.size.toString
           else (srcFiles.size * stageCopies).toString)
         .parquet(stage.toString)
-      val converted = raw.schema("ts").dataType match {
-        case LongType => raw.withColumn("ts", timestamp_micros(expr("(ts - pmod(ts, 1000)) div 1000")))
-        case _ => raw // TimestampType — NTZ already re-declared above
-      }
-      val events = converted
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-        .as[EventStreams.Event]
-      // sink: the in-memory table by default; `parquetSinkDir` swaps in
-      // the exactly-once foreachBatch parquet path (st09) — same staging,
-      // same ticks, result read back from the committed files
-      val writer = transform(events)
+      val writer = source.stream(raw)
         .writeStream.outputMode(mode)
         .option("checkpointLocation", ckpt)
       val fStage = System.nanoTime()
-      val query = (foreachBatchFn, parquetSinkDir) match {
-        case (Some(fn), _) => writer.foreachBatch(fn).start()
-        case (None, Some(out)) =>
-          writer.foreachBatch { (b: DataFrame, id: Long) =>
-            EventStreams.writeBatchIdempotent(b, id, out)
-          }.start()
-        case _ => writer.format("memory").queryName(sink).start()
+      val query = sink match {
+        case Sink.ForeachBatch(fn) => writer.foreachBatch(fn).start()
+        case _ => writer.format("memory").queryName(sinkName).start()
       }
       val fStart = System.nanoTime()
       try {
-        query.processAllAvailable()
+        val settle = awaitRows match {
+          case Some(n) => awaitSinkRows(s, query, sinkName, n)
+          case None => query.processAllAvailable(); Map.empty[String, Double]
+        }
         // Watermark ticks use event_type "view" — an event type every
         // operator's own filter KEEPS. A made-up type would be cleaner,
         // but the optimizer pushes `filter(event_type isin …)` BELOW the
@@ -460,7 +498,17 @@ object StreamReplay {
         // files, each once — the engine-layer guard that converts the
         // seen-files-log corruption class from silent duplicates to loud
         IngestAudit.audit(ckpt, stage)
-        if (!multiScan) reconcileStagedRows(s, query, ckpt, stage, fileSchema)
+        // row reconciliation only when the progress history is KNOWN
+        // complete: a sink-count/deadline settle (signal 1/2) can detect
+        // fullness between the final batch's addBatch and its progress
+        // event, and the coverage guard inside reconcileStagedRows cannot
+        // see a missing TAIL entry — the sum would be short and the
+        // check would false-loud a passing replay. Signal 0 (the crossing
+        // progress event itself was read) and no loop (processAllAvailable
+        // ran to quiescence) are both complete.
+        val signal = settle.getOrElse("settle_signal", -1.0)
+        if (!multiScan && signal != 1.0 && signal != 2.0)
+          reconcileStagedRows(s, query, ckpt, stage, fileSchema)
         val batches = Option(query.lastProgress).map(_.batchId + 1).getOrElse(0L)
         // recentProgress retains (by default) far more batches than any
         // replay here runs, so these sums cover the whole query's
@@ -473,32 +521,154 @@ object StreamReplay {
           .flatMap(so => Option(so.customMetrics.get("numDroppedDuplicateRows")))
           .map(_.longValue).sum
         val floorBatches = progressSums(query.recentProgress)
-        val res = Replayed((foreachBatchFn, parquetSinkDir) match {
-          case (Some(_), _) => s.emptyDataFrame // custom sink: caller reads its target
-          // lazy: the only caller (st09) re-reads the dir itself after
-          // its hostile retry — an eager checkpoint here would scan and
-          // cache the full sink for nothing
-          case (None, Some(out)) => s.read.parquet(out)
-          case _ => s.table(sink).localCheckpoint()
-        }, maxTs, batches, lateDropped, dupDropped)
+        val df = sink match {
+          case Sink.Memory => s.table(sinkName).localCheckpoint()
+          case Sink.ForeachBatch(_) => s.emptyDataFrame
+          case Sink.StateOf(extract) =>
+            // stop first, then materialize before the scratch
+            // (checkpoint included) is torn down below
+            query.stop()
+            extract(s, ckpt).localCheckpoint()
+        }
         val fEnd = System.nanoTime()
-        lastFloor.set(floorBatches ++ Map(
+        lastFloor.set(floorBatches ++ settle ++ Map(
           "stage_sec" -> (fStage - f0) / 1e9,
           "start_sec" -> (fStart - fStage) / 1e9,
           "process_sec" -> (fProc - fStart) / 1e9,
           "extract_sec" -> (fEnd - fProc) / 1e9,
           "total_sec" -> (fEnd - f0) / 1e9))
-        res
+        Replayed(df, maxTs, batches, lateDropped, dupDropped)
       } finally {
         query.stop()
-        if (parquetSinkDir.isEmpty) s.catalog.dropTempView(sink)
+        s.catalog.dropTempView(sinkName)
       }
     } finally {
       // outer finally: the scratch (staged input + checkpoint) exists
-      // even when transform()/start() throws before the inner try begins
+      // even when staging or start() throws before the inner try begins
       try org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
       catch { case _: java.io.IOException => () }
     }
+  }
+
+  /** The `awaitRows` settle rule: block until the memory sink `sink`
+    * holds `n` rows — the termination signal for processing-time
+    * `transformWithState`, which never quiesces (see st16Shaped). A
+    * query failure (state-store error, bad config) surfaces IMMEDIATELY,
+    * not as a generic stuck-below-n timeout ten minutes later. Returns
+    * the settle telemetry [[lastFloor]] carries: `poll_sleep_sec`,
+    * `poll_sinkcount_sec` and the `settle_*` fields (see the loop).
+    *
+    * Settlement reads CUMULATIVE sink.numOutputRows off the progress
+    * events, not `s.table(sink).count()`: the r17 floor itemization
+    * (SOAK_r17_replayfloor.json) measured the count polls at 2.4s of
+    * driver-side jobs COMPETING with batch execution for cores — ~40% of
+    * st18's settle phase spent re-scanning the memory sink ~30 times.
+    * Progress accounting is free; batches are sequential and the poll
+    * cadence (100ms) cannot realistically miss the 100-entry progress
+    * retention window — and the three ways it could still under-count are
+    * all guarded: a sink that stops reporting commit rows
+    * (numOutputRows = -1) flips the loop to sink-count settlement, a
+    * batchId GAP in recentProgress (entries evicted past the retention
+    * window between polls — a batch storm) latches the same fallback
+    * IMMEDIATELY instead of stalling to the deadline, and the deadline
+    * path believes one final sink count before declaring the run stuck. */
+  private def awaitSinkRows(s: SparkSession,
+      query: org.apache.spark.sql.streaming.StreamingQuery,
+      sink: String, n: Long): Map[String, Double] = {
+    var pollSleepNs = 0L
+    var pollCountNs = 0L
+    val deadline = System.currentTimeMillis() + 10 * 60 * 1000L
+    var acc = 0L
+    var lastBatch = -1L
+    var settled = false
+    // settle-path instrumentation (r18 verdict #4): WHICH signal
+    // settled the run (0=progress accounting, 1=throttled sink count,
+    // 2=deadline-path final count), how many fallback count() jobs ran,
+    // and the residual wait between the sink actually filling (last
+    // batch's commit end, estimated from its progress timestamp +
+    // triggerExecution) and settle detection — so the next st06-style
+    // warmed-sweep flag is answered by a field, not a fresh-JVM re-run
+    var settleSignal = 0.0
+    var countJobs = 0L
+    // a sink/Spark version that stops reporting per-batch commit rows
+    // (SinkProgress.numOutputRows = -1) would make progress accounting
+    // permanently under-count — fall back to the (job-costing) sink
+    // count for the rest of the run instead of dying at the deadline
+    // with the sink actually full
+    var useCount = false
+    // once useCount latches, the count() job is throttled to 1s cadence:
+    // running it every 100ms poll would reintroduce the driver-job
+    // contention the progress accounting was measured to remove
+    // (SOAK_r17_replayfloor). 0 ⇒ first count runs immediately on latch.
+    var lastCountMs = 0L
+    while (!settled) {
+      val c0 = System.nanoTime()
+      val newer = query.recentProgress.filter(_.batchId > lastBatch)
+        .sortBy(_.batchId)
+      // eviction detection: the oldest retained entry skipping past
+      // lastBatch+1 means batches fell out of the retention window
+      // un-counted — acc is permanently short; latch the sink-count
+      // fallback now rather than ride to the deadline
+      if (newer.nonEmpty && newer.head.batchId > lastBatch + 1)
+        useCount = true
+      newer.foreach { p =>
+        val rows = Option(p.sink).map(_.numOutputRows).getOrElse(-1L)
+        if (rows < 0) useCount = true else acc += rows
+        lastBatch = p.batchId
+      }
+      // acc keeps accumulating the batches that DO report, so it stays
+      // the free fast path even after a -1 latched useCount — the
+      // count() job only runs while neither signal has settled
+      settled = acc >= n || (useCount && {
+        val now = System.currentTimeMillis()
+        if (now - lastCountMs >= 1000L) {
+          lastCountMs = now
+          countJobs += 1
+          val full = s.table(sink).count() >= n
+          if (full) settleSignal = 1.0
+          full
+        } else false
+      })
+      pollCountNs += System.nanoTime() - c0
+      if (!settled) {
+        query.exception.foreach(throw _)
+        if (!query.isActive)
+          sys.error(s"replay: query for $sink terminated " +
+            s"at ${s.table(sink).count()} of $n rows with no exception")
+        if (System.currentTimeMillis() > deadline) {
+          // belt-and-suspenders against any progress-accounting blind
+          // spot (e.g. retention eviction under an extreme batch storm):
+          // believe the sink itself before dying
+          countJobs += 1
+          if (s.table(sink).count() >= n) { settled = true; settleSignal = 2.0 }
+          else sys.error(s"replay: sink $sink stuck below $n rows " +
+            s"(progress-counted $acc, sink ${s.table(sink).count()})")
+        }
+        val s0 = System.nanoTime()
+        Thread.sleep(100)
+        pollSleepNs += System.nanoTime() - s0
+      }
+    }
+    // residual wait: detection instant minus the last batch's COMMIT
+    // END, estimated from its progress timestamp (trigger start) +
+    // triggerExecution duration — the moment the sink actually filled
+    // for the normal sequential-batch case. A lower-bound estimate when
+    // extra (post-fill) batches committed before detection; exact enough
+    // to adjudicate a warmed-sweep flag against the 1s count throttle.
+    val detectMs = System.currentTimeMillis()
+    val lastCommitEndMs = query.recentProgress.map { p =>
+      java.time.Instant.parse(p.timestamp).toEpochMilli +
+        Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L)
+    }.maxOption.getOrElse(detectMs)
+    Map(
+      "poll_sleep_sec" -> pollSleepNs / 1e9,
+      "poll_sinkcount_sec" -> pollCountNs / 1e9,
+      // which signal fired (0=progress accounting, 1=throttled sink
+      // count, 2=deadline-path final count), how many fallback count()
+      // jobs ran, and the sink-full -> settle-detection residual
+      "settle_signal" -> settleSignal,
+      "settle_count_jobs" -> countJobs.toDouble,
+      "settle_residual_wait_sec" -> math.max(0L, detectMs - lastCommitEndMs) / 1e3)
   }
 
   /** st01: the streaming windowed funnel (EventStreams.funnelWindow) run
@@ -509,8 +679,8 @@ object StreamReplay {
     * green, so both precisions are pinned.
     */
   val st01_funnel_stream: Q = (s, dir) =>
-    replay(s, dir, OutputMode.Append(),
-      ds => EventStreams.funnelWindow(ds).toDF())
+    replayRaw(s, dir, OutputMode.Append(),
+      Events(ds => EventStreams.funnelWindow(ds).toDF())).df
       .agg(count(col("signup_ms")).as("n_signup"),
         count(col("view_ms")).as("n_view_24h"),
         count(col("purchase_ms")).as("n_purchase_24h"))
@@ -532,14 +702,14 @@ object StreamReplay {
   val st02b_cohort_multibatch: Q = (s, dir) => st02Shaped(s, dir, chunks = 8)
 
   private def st02Shaped(s: SparkSession, dir: String, chunks: Int): DataFrame =
-    replay(s, dir, OutputMode.Complete(),
+    replayRaw(s, dir, OutputMode.Complete(),
       // cohortUpdates tracks EVERY event type, so tick rows would need
       // dropping here anyway (they are the only negative user ids) —
       // but its state function uses GroupStateTimeout.NoTimeout, so the
       // ticks have NOTHING to fire and each would cost a full state
       // pass + Complete-mode sink rewrite (the st05 lesson): skip them
-      ds => EventStreams.cohortCounts(ds.filter(_.user_id >= 0L)),
-      ticks = false, chunks = chunks)
+      Events(ds => EventStreams.cohortCounts(ds.filter(_.user_id >= 0L)),
+        ticks = false), chunks = chunks).df
       .orderBy(col("cohort_week"), col("k"))
 
   /** st03: the WINDOWED-AGGREGATION state path (EventStreams
@@ -564,7 +734,7 @@ object StreamReplay {
 
   private def st03Shaped(s: SparkSession, dir: String, chunks: Int): DataFrame = {
     val r = replayRaw(s, dir, OutputMode.Append(),
-      ds => EventStreams.windowedCounts(ds.toDF()), chunks = chunks)
+      Events(ds => EventStreams.windowedCounts(ds.toDF())), chunks = chunks)
     r.df.filter(col("bucket_start") <= timestamp_millis(lit(r.maxTs)))
       .select(unix_timestamp(col("bucket_start")).as("bucket_start"),
         col("event_type"), col("n"), col("total_value"))
@@ -590,7 +760,7 @@ object StreamReplay {
 
   private def st04Shaped(s: SparkSession, dir: String, chunks: Int): DataFrame = {
     val r = replayRaw(s, dir, OutputMode.Append(),
-      ds => EventStreams.topKPerWindow(ds).toDF(), chunks = chunks)
+      Events(ds => EventStreams.topKPerWindow(ds).toDF()), chunks = chunks)
     r.df.filter(col("window_start_ms") <= r.maxTs)
       .select(col("window_start_ms"), col("rank"), col("event_type"), col("n"))
       .orderBy(col("window_start_ms"), col("rank"))
@@ -618,7 +788,7 @@ object StreamReplay {
 
   private def st05Shaped(s: SparkSession, dir: String, chunks: Int): DataFrame =
     replayRaw(s, dir, OutputMode.Append(),
-      ds => EventStreams.clickViewJoin(ds.toDF()), ticks = false,
+      Events(ds => EventStreams.clickViewJoin(ds.toDF()), ticks = false),
       chunks = chunks, multiScan = true).df
       .select(col("user_id"), col("click_id"), col("view_id"),
         unix_micros(col("c_ts")).as("c_us"), unix_micros(col("v_ts")).as("v_us"))
@@ -637,7 +807,7 @@ object StreamReplay {
     */
   val st10_interval_join_outer: Q = (s, dir) =>
     replayRaw(s, dir, OutputMode.Append(),
-      ds => EventStreams.clickViewJoinOuter(ds.toDF()), chunks = 1,
+      Events(ds => EventStreams.clickViewJoinOuter(ds.toDF())),
       multiScan = true).df
       .filter(col("user_id") >= 0)
       .select(col("user_id"), col("click_id"), col("view_id"),
@@ -657,8 +827,8 @@ object StreamReplay {
     */
   val st06_dedup_stream: Q = (s, dir) =>
     replayRaw(s, dir, OutputMode.Append(),
-      ds => EventStreams.dedupeStream(ds.toDF()),
-      ticks = false, stageCopies = 2).df
+      Events(ds => EventStreams.dedupeStream(ds.toDF()), ticks = false),
+      stageCopies = 2).df
       .select(col("event_id"), unix_micros(col("ts")).as("us"),
         col("user_id"), col("event_type"), col("value"))
       .orderBy(col("event_id"))
@@ -688,8 +858,8 @@ object StreamReplay {
       if (mm.isNullAt(0)) 10L
       else (mm.getTimestamp(1).getTime - mm.getTimestamp(0).getTime) / 60000L + 11L
     replayRaw(s, dir, OutputMode.Append(),
-      ds => EventStreams.dedupeStream(ds.toDF(), watermark = s"$spanMin minutes"),
-      ticks = false, stageCopies = 2, copiesAsBatches = true).df
+      Events(ds => EventStreams.dedupeStream(ds.toDF(), watermark = s"$spanMin minutes"),
+        ticks = false), stageCopies = 2, copiesAsBatches = true).df
       .select(col("event_id"), unix_micros(col("ts")).as("us"),
         col("user_id"), col("event_type"), col("value"))
       .orderBy(col("event_id"))
@@ -722,8 +892,8 @@ object StreamReplay {
   val st07b_session_multibatch: Q = (s, dir) => st07Shaped(s, dir, chunks = 8)
 
   private def st07Shaped(s: SparkSession, dir: String, chunks: Int): DataFrame =
-    replay(s, dir, OutputMode.Append(),
-      ds => EventStreams.sessionize(ds).toDF(), chunks = chunks)
+    replayRaw(s, dir, OutputMode.Append(),
+      Events(ds => EventStreams.sessionize(ds).toDF()), chunks = chunks).df
       .filter(col("user_id") >= 0)
       .select(col("user_id"), col("n_events"),
         col("total_value"), col("duration_ms")) // exact cents/100.0 from the fold
@@ -762,7 +932,7 @@ object StreamReplay {
 
   private def st14Shaped(s: SparkSession, dir: String, chunks: Int): DataFrame =
     replayRaw(s, dir, OutputMode.Append(),
-      ds => EventStreams.recentEvents(ds).toDF(), chunks = chunks,
+      Events(ds => EventStreams.recentEvents(ds).toDF()), chunks = chunks,
       stateStore = Some("rocksdb")).df
       .filter(col("user_id") >= 0)
       .select(col("user_id"), col("rk"), col("event_id"), col("ms"))
@@ -782,7 +952,7 @@ object StreamReplay {
 
   private def st15Shaped(s: SparkSession, dir: String, chunks: Int): DataFrame =
     replayRaw(s, dir, OutputMode.Append(),
-      ds => EventStreams.typeHistogram(ds).toDF(), chunks = chunks,
+      Events(ds => EventStreams.typeHistogram(ds).toDF()), chunks = chunks,
       stateStore = Some("rocksdb")).df
       .filter(col("user_id") >= 0)
       .select(col("user_id"), col("event_type"), col("n"))
@@ -851,11 +1021,12 @@ object StreamReplay {
     * structure against the data it summarizes) applied to streaming
     * state. */
   val st19_gate_state_reader: Q = (s, dir) =>
-    replayDocs(s, dir, docs => DocStreams.nearDupFlags(docs), chunks = 8,
-      stateExtract = Some((sess, ckpt) => DocStreams.ownerState(sess, ckpt)
+    replayRaw(s, dir, OutputMode.Append(), Documents(DocStreams.nearDupFlags),
+      chunks = 8, stateStore = Some("rocksdb"), // see st16Shaped
+      sink = Sink.StateOf((sess, ckpt) => DocStreams.ownerState(sess, ckpt)
         // the no-TTL checkpoint has no expiry; the gate pins the domain
         // columns (the TTL'd layout's expires_ms is spec-covered)
-        .select(col("band"), col("h"), col("owner"))))
+        .select(col("band"), col("h"), col("owner")))).df
       .orderBy(col("band"), col("h"))
 
   private def st16Shaped(s: SparkSession, dir: String, chunks: Int,
@@ -882,7 +1053,12 @@ object StreamReplay {
     // quantifies that rate and the ingest-cadence throttle's effect.
     val awaitRows = ttlMillis.map(_ =>
       DocStreams.expectedBandRows(graft.Tables.documents(s, dir)))
-    val flags = replayDocs(s, dir, gate, chunks, awaitRows = awaitRows)
+    // RocksDB pinned whatever the process default: transformWithState is
+    // RocksDB-only in Spark 4. Snapshot (non-changelog) checkpointing
+    // kept: changelog re-A/B'd r20 within noise at this state size (st18
+    // addBatch 3.47 vs 3.27 s); at 100 TB it is the production setting.
+    val flags = replayRaw(s, dir, OutputMode.Append(), Documents(gate),
+      chunks = chunks, stateStore = Some("rocksdb"), awaitRows = awaitRows).df
       .groupBy(col("doc_id")).agg(max(col("dup")).as("near_dup"))
     graft.Tables.documents(s, dir).select(col("doc_id"))
       .join(flags, Seq("doc_id"), "left")
@@ -890,245 +1066,11 @@ object StreamReplay {
       .orderBy(col("doc_id"))
   }
 
-  /** Documents-table replay for the ingest-gate entries: the
-    * [[replayRaw]] file-stream protocol minus the event-time machinery
-    * (no watermark, no ticks — the processor runs `TimeMode.None` and
-    * emits per batch, so there is nothing for a tick to close).
-    * `chunks > 1` stages the table as doc_id-RANGED chunk files consumed
-    * one per micro-batch. RocksDB pinned: transformWithState is
-    * RocksDB-only in Spark 4 (the st13 note). */
-  private def replayDocs(outer: SparkSession, dir: String,
-      transform: DataFrame => DataFrame, chunks: Int,
-      awaitRows: Option[Long] = None,
-      stateExtract: Option[(SparkSession, String) => DataFrame] = None): DataFrame = {
-    val f0 = System.nanoTime() // floor itemization — see lastFloor
-    val s: SparkSession = outer.newSession()
-    // Partition count: [[replayShufflePartitions]] (r20 re-measure —
-    // the r17 "4 slightly worse" null was taken under commits dominated
-    // by per-file chmod forks; with the fork-free FS the per-partition
-    // commit envelope dominates and 4 wins ~20-25% on st18, knob
-    // artifacts in OPTIMIZATION_r20.md). Snapshot (non-changelog)
-    // RocksDB checkpointing KEPT: changelog re-A/B'd r20 and still
-    // within noise at this state size (st18 addBatch 3.47 vs 3.27 in
-    // one window, indistinguishable in the next); at 100 TB state sizes
-    // changelog checkpointing is still the right production setting —
-    // the null is about gate-scale replay cost.
-    s.conf.set("spark.sql.shuffle.partitions", replayShufflePartitions)
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val base = graft.Scratch.tempDir("graftdocreplay")
-    val stage = Files.createDirectory(base.resolve("in"))
-    val ckpt = base.resolve("ckpt").toString
-    val src = new java.io.File(s"$dir/documents.parquet")
-    // recursive listing, matching replayRaw: a partitioned/nested
-    // documents.parquet directory is a valid batch-read layout, so the
-    // replay must stage those files too (a non-recursive listing would
-    // silently stage a SUBSET of a mixed layout — partial corpus into
-    // the stream, full corpus into the oracle)
-    val srcFiles: Seq[java.io.File] = listParquetFiles(src)
-    require(srcFiles.nonEmpty, s"no parquet files found under $src")
-    val sink = s"graft_docreplay_${sinkId.incrementAndGet()}"
-    try {
-      val staged: Seq[Path] =
-        if (chunks > 1)
-          stageChunks(s, base, stage, src.getAbsolutePath, chunks, "doc_id", "doc")
-        else srcFiles.zipWithIndex.map { case (f, i) =>
-          Files.copy(f.toPath, stage.resolve(f"real-$i%05d.parquet"))
-        }
-      pinMtimes(staged)
-      val stagedSchema = s.read.parquet(staged.head.toString).schema
-      val raw = s.readStream
-        .schema(stagedSchema)
-        .option("maxFilesPerTrigger", if (chunks > 1) "1" else staged.size.toString)
-        .parquet(stage.toString)
-      val writer = transform(raw)
-        .writeStream.outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .format("memory").queryName(sink)
-      val fStage = System.nanoTime()
-      val query = writer.start()
-      val fStart = System.nanoTime()
-      var pollSleepNs = 0L
-      var pollCountNs = 0L
-      // settle instrumentation, surfaced through lastFloor (see below):
-      // -1 = no awaitRows loop ran (processAllAvailable settlement)
-      var settleSignalOut = -1.0
-      var settleCountJobs = 0.0
-      var settleResidualSec = 0.0
-      try {
-        awaitRows match {
-          case Some(n) =>
-            // see st16Shaped: processing-time TWS never quiesces, so
-            // termination = the sink holding every expected output row.
-            // A query failure (state-store error, bad config) must
-            // surface IMMEDIATELY, not as a generic stuck-below-n
-            // timeout ten minutes later.
-            //
-            // Settlement reads CUMULATIVE sink.numOutputRows off the
-            // progress events, not `s.table(sink).count()`: the r17 floor
-            // itemization (SOAK_r17_replayfloor.json) measured the count
-            // polls at 2.4s of driver-side jobs COMPETING with batch
-            // execution for cores — ~40% of st18's settle phase spent
-            // re-scanning the memory sink ~30 times. Progress accounting
-            // is free; batches are sequential and the poll cadence (100ms)
-            // cannot realistically miss the 100-entry progress retention
-            // window — and the three ways it could still under-count are
-            // all guarded: a sink that stops reporting commit rows
-            // (numOutputRows = -1) flips the loop to sink-count settlement,
-            // a batchId GAP in recentProgress (entries evicted past the
-            // retention window between polls — a batch storm) latches the
-            // same fallback IMMEDIATELY instead of stalling to the
-            // deadline, and the deadline path believes one final sink
-            // count before declaring the run stuck.
-            val deadline = System.currentTimeMillis() + 10 * 60 * 1000L
-            var acc = 0L
-            var lastBatch = -1L
-            var settled = false
-            // settle-path instrumentation (r18 verdict #4): WHICH signal
-            // settled the run (0=progress accounting, 1=throttled sink
-            // count, 2=deadline-path final count), how many fallback
-            // count() jobs ran, and the residual wait between the sink
-            // actually filling (last batch's commit end, estimated from
-            // its progress timestamp + triggerExecution) and settle
-            // detection — so the next st06-style warmed-sweep flag is
-            // answered by a field, not a fresh-JVM re-run
-            var settleSignal = 0.0
-            var countJobs = 0L
-            // a sink/Spark version that stops reporting per-batch commit
-            // rows (SinkProgress.numOutputRows = -1) would make progress
-            // accounting permanently under-count — fall back to the
-            // (job-costing) sink count for the rest of the run instead of
-            // dying at the deadline with the sink actually full
-            var useCount = false
-            // once useCount latches, the count() job is throttled to 1s
-            // cadence: running it every 100ms poll would reintroduce the
-            // driver-job contention the progress accounting was measured
-            // to remove (SOAK_r17_replayfloor). 0 ⇒ first count runs
-            // immediately on latch.
-            var lastCountMs = 0L
-            while (!settled) {
-              val c0 = System.nanoTime()
-              val newer = query.recentProgress.filter(_.batchId > lastBatch)
-                .sortBy(_.batchId)
-              // eviction detection: the oldest retained entry skipping
-              // past lastBatch+1 means batches fell out of the retention
-              // window un-counted — acc is permanently short; latch the
-              // sink-count fallback now rather than ride to the deadline
-              if (newer.nonEmpty && newer.head.batchId > lastBatch + 1)
-                useCount = true
-              newer.foreach { p =>
-                val rows = Option(p.sink).map(_.numOutputRows).getOrElse(-1L)
-                if (rows < 0) useCount = true else acc += rows
-                lastBatch = p.batchId
-              }
-              // acc keeps accumulating the batches that DO report, so it
-              // stays the free fast path even after a -1 latched useCount —
-              // the count() job only runs while neither signal has settled
-              settled = acc >= n || (useCount && {
-                val now = System.currentTimeMillis()
-                if (now - lastCountMs >= 1000L) {
-                  lastCountMs = now
-                  countJobs += 1
-                  val full = s.table(sink).count() >= n
-                  if (full) settleSignal = 1.0
-                  full
-                } else false
-              })
-              pollCountNs += System.nanoTime() - c0
-              if (!settled) {
-                query.exception.foreach(throw _)
-                if (!query.isActive)
-                  sys.error(s"replayDocs: query for $sink terminated " +
-                    s"at ${s.table(sink).count()} of $n rows with no exception")
-                if (System.currentTimeMillis() > deadline) {
-                  // belt-and-suspenders against any progress-accounting
-                  // blind spot (e.g. retention eviction under an extreme
-                  // batch storm): believe the sink itself before dying
-                  countJobs += 1
-                  if (s.table(sink).count() >= n) { settled = true; settleSignal = 2.0 }
-                  else sys.error(s"replayDocs: sink $sink stuck below $n rows " +
-                    s"(progress-counted $acc, sink ${s.table(sink).count()})")
-                }
-                val s0 = System.nanoTime()
-                Thread.sleep(100)
-                pollSleepNs += System.nanoTime() - s0
-              }
-            }
-            settleSignalOut = settleSignal
-            settleCountJobs = countJobs.toDouble
-            // residual wait: detection instant minus the last batch's
-            // COMMIT END, estimated from its progress timestamp (trigger
-            // start) + triggerExecution duration — the moment the sink
-            // actually filled for the normal sequential-batch case. A
-            // lower-bound estimate when extra (post-fill) batches
-            // committed before detection; exact enough to adjudicate a
-            // warmed-sweep flag against the 1s count throttle.
-            val detectMs = System.currentTimeMillis()
-            val lastCommitEndMs = query.recentProgress.map { p =>
-              java.time.Instant.parse(p.timestamp).toEpochMilli +
-                Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L)
-            }.maxOption.getOrElse(detectMs)
-            settleResidualSec = math.max(0L, detectMs - lastCommitEndMs) / 1e3
-          case None => query.processAllAvailable()
-        }
-        // settle-time ingest audit — same guard as replayRaw's (see
-        // IngestAudit); by settlement every staged doc chunk has been
-        // planned into a batch, so the source log is complete
-        IngestAudit.audit(ckpt, stage)
-        // row reconciliation only when the progress history is KNOWN
-        // complete: a sink-count/deadline settle (signal 1/2) can detect
-        // fullness between the final batch's addBatch and its progress
-        // event, and the coverage guard inside reconcileStagedRows cannot
-        // see a missing TAIL entry — the sum would be short and the
-        // check would false-loud a passing replay. Signal 0 (the crossing
-        // progress event itself was read) and -1 (no loop:
-        // processAllAvailable ran to quiescence) are both complete.
-        if (settleSignalOut != 1.0 && settleSignalOut != 2.0)
-          reconcileStagedRows(s, query, ckpt, stage, stagedSchema)
-        val fProc = System.nanoTime()
-        val floorBatches = progressSums(query.recentProgress)
-        val result = stateExtract match {
-          case None => s.table(sink).localCheckpoint()
-          case Some(extract) =>
-            // the entry under test is the persisted STATE, not the sink:
-            // stop first so the state source reads a quiesced checkpoint
-            // at its last committed batch, then materialize before the
-            // temp dir (checkpoint included) is torn down below
-            query.stop()
-            extract(s, ckpt).localCheckpoint()
-        }
-        val fEnd = System.nanoTime()
-        lastFloor.set(floorBatches ++ Map(
-          "stage_sec" -> (fStage - f0) / 1e9,
-          "start_sec" -> (fStart - fStage) / 1e9,
-          "process_sec" -> (fProc - fStart) / 1e9,
-          "poll_sleep_sec" -> pollSleepNs / 1e9,
-          "poll_sinkcount_sec" -> pollCountNs / 1e9,
-          // which settlement signal fired (0=progress accounting,
-          // 1=throttled sink count, 2=deadline-path final count; -1 = no
-          // awaitRows loop), how many fallback count() jobs ran, and the
-          // sink-full -> settle-detection residual (see the loop)
-          "settle_signal" -> settleSignalOut,
-          "settle_count_jobs" -> settleCountJobs,
-          "settle_residual_wait_sec" -> settleResidualSec,
-          "extract_sec" -> (fEnd - fProc) / 1e9,
-          "total_sec" -> (fEnd - f0) / 1e9))
-        result
-      } finally {
-        query.stop()
-        s.catalog.dropTempView(sink)
-      }
-    } finally {
-      try org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
-      catch { case _: java.io.IOException => () }
-    }
-  }
-
   private def st13Shaped(s: SparkSession, dir: String, chunks: Int): DataFrame =
     // transformWithState is RocksDB-only in Spark 4 — pin the provider
     // for this replay regardless of the process-level default
     replayRaw(s, dir, OutputMode.Append(),
-      ds => EventStreams.runningProfile(ds).toDF(), chunks = chunks,
+      Events(ds => EventStreams.runningProfile(ds).toDF()), chunks = chunks,
       stateStore = Some("rocksdb")).df
       .filter(col("user_id") >= 0)
       .select(col("user_id"), col("n_events"), col("n_purchases"), col("total_value"))
@@ -1153,8 +1095,8 @@ object StreamReplay {
   val st12b_session_window_multibatch: Q = (s, dir) => st12Shaped(s, dir, chunks = 8)
 
   private def st12Shaped(s: SparkSession, dir: String, chunks: Int): DataFrame =
-    replay(s, dir, OutputMode.Append(),
-      ds => EventStreams.sessionWindowAgg(ds.toDF()), chunks = chunks)
+    replayRaw(s, dir, OutputMode.Append(),
+      Events(ds => EventStreams.sessionWindowAgg(ds.toDF())), chunks = chunks).df
       .filter(col("user_id") >= 0)
       .select(col("user_id"), col("session_start"), col("session_end"),
         col("n_events"), col("total_value"))
@@ -1183,8 +1125,8 @@ object StreamReplay {
   val st11b_scd2_multibatch: Q = (s, dir) => st11Shaped(s, dir, chunks = 8)
 
   private def st11Shaped(s: SparkSession, dir: String, chunks: Int): DataFrame =
-    replay(s, dir, OutputMode.Append(),
-      ds => EventStreams.scd2(ds).toDF(), chunks = chunks)
+    replayRaw(s, dir, OutputMode.Append(),
+      Events(ds => EventStreams.scd2(ds).toDF()), chunks = chunks).df
       .filter(col("user_id") >= 0)
       .select(col("user_id"), col("version"), col("state"),
         col("valid_from_ms"), col("valid_to_ms"), col("is_current"))
@@ -1208,9 +1150,9 @@ object StreamReplay {
     val cust = graft.Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
     replayRaw(s, dir, OutputMode.Append(),
-      ds => ds.toDF().join(broadcast(cust), col("user_id") === col("c_custkey"))
-        .select(col("event_id"), col("value"), col("c_mktsegment")),
-      ticks = false, chunks = 4).df
+      Events(ds => ds.toDF().join(broadcast(cust), col("user_id") === col("c_custkey"))
+        .select(col("event_id"), col("value"), col("c_mktsegment")), ticks = false),
+      chunks = 4).df
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_events"),
         (sum(floor(col("value") * 100 + lit(0.5))) / lit(100.0)).as("total_value"))
@@ -1236,8 +1178,8 @@ object StreamReplay {
     val out = graft.Scratch.tempDir("graft-st09-sink").toString
     try {
       val r = replayRaw(s, dir, OutputMode.Append(),
-        ds => EventStreams.windowedCounts(ds.toDF()),
-        chunks = 4, parquetSinkDir = Some(out))
+        Events(ds => EventStreams.windowedCounts(ds.toDF())), chunks = 4,
+        sink = Sink.ForeachBatch(EventStreams.writeBatchIdempotent(_, _, out)))
       val delivered = s.read.parquet(out)
       val maxBatch = delivered.agg(max(col("batch_id").cast("long")))
         .head().getLong(0)
@@ -1276,10 +1218,8 @@ object StreamReplay {
     val target = graft.Scratch.tempDir("graft-st17-target").toString
     try {
       replayRaw(s, dir, OutputMode.Append(),
-        ds => ds.toDF(),
-        ticks = false, chunks = 8,
-        foreachBatchFn = Some((b: DataFrame, id: Long) =>
-          EventStreams.applyChangeset(b, id, target)))
+        Events(ds => ds.toDF(), ticks = false), chunks = 8,
+        sink = Sink.ForeachBatch(EventStreams.applyChangeset(_, _, target)))
       val lastId = EventStreams.latestVersion(target)
         .map(p => new org.apache.hadoop.fs.Path(p).getName.drop(1).toLong)
         .getOrElse(sys.error(s"no committed version under $target"))

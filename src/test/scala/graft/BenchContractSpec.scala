@@ -33,18 +33,21 @@ class BenchContractSpec extends AnyFunSuite {
   }
 
   test("parsed line drops sysmed/sysmax first, then warns, past the cap") {
-    def times(n: Int) = (1 to n).map(i => f"q$i%03d_entry" -> 1.234).toMap
+    // sub-second entries: the later degrade step (1 decimal from 1 s up)
+    // cannot shorten them, so past the drift drop nothing is left to cut
+    def times(n: Int, sec: Double = 0.1234) =
+      (1 to n).map(i => f"q$i%03d_entry" -> sec).toMap
     val warnings = scala.collection.mutable.Buffer.empty[String]
     val sys = Seq(1.5, 2.5, 40.0)
 
-    val short = parsedLine(12.3456, times(3), "/sf", sys, warnings += _)
+    val short = parsedLine(12.3456, times(3, 1.234), "/sf", sys, warnings += _)
     assert(short ===
       """{"metric":"total","value":12.346,"unit":"sec",""" +
       """"queries":{"q001":1.23,"q002":1.23,"q003":1.23},"sf":"/sf",""" +
       """"sysmed":2.5,"sysmax":40.0}""")
     assert(warnings.isEmpty)
 
-    // each query adds 12 chars ("q001":1.23,); pick n so the drift keys
+    // each query adds 12 chars ("q001":0.12,); pick n so the drift keys
     // push the line just past the cap but the lean line still fits
     val lean0 = parsedLine(12.3456, times(3), "/sf", Nil, warnings += _).length
     val n = 3 + (ParsedLineMaxChars - lean0) / 12
@@ -58,5 +61,30 @@ class BenchContractSpec extends AnyFunSuite {
     assert(over.length > ParsedLineMaxChars)
     assert(!over.contains("sysmed"))
     assert(warnings.size === 1 && warnings.head.contains(s"${over.length} chars"))
+  }
+
+  test("the committed r20 166-entry map fits the cap with no warning") {
+    import scala.jdk.CollectionConverters._
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val r20 = om.readTree(new java.io.File("BENCH_r20.json")).path("parsed")
+    val times = r20.path("queries").properties().asScala
+      .map(e => e.getKey -> e.getValue.asDouble).toMap
+    assert(times.size === 166)
+    val warnings = scala.collection.mutable.Buffer.empty[String]
+    val sys = Seq(r20.path("sysmed").asDouble, r20.path("sysmax").asDouble)
+    val line = parsedLine(r20.path("value").asDouble, times, r20.path("sf").asText,
+      sys, warnings += _)
+    assert(line.length <= ParsedLineMaxChars)
+    assert(warnings.isEmpty)
+    val back = om.readTree(line) // throws unless valid JSON
+    assert(back.properties().asScala.map(_.getKey).toSet ===
+      Set("metric", "value", "unit", "queries", "sf"))
+    val got = back.path("queries").properties().asScala
+      .map(e => e.getKey -> e.getValue.asDouble).toMap
+    assert(got.keySet === times.keySet)
+    times.foreach { case (k, v) => assert(math.abs(got(k) - v) <= 0.05 + 1e-9, k) }
+    // the lossless trim alone leaves the r20 line over the cap: the
+    // 1-decimal step is what brings it under
+    assert(got.exists { case (k, v) => v != times(k) })
   }
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import StreamReplay.{Events, Sink}
+
 /** Regression specs for the MemoryStream replay harness behind the st01/
   * st02 correctness-gate entries — chiefly the watermark-tick protocol:
   * ticks must use an event type the operators' own filters KEEP, because
@@ -40,6 +42,28 @@ class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
+
+  /** 20 documents over a spread doc_id range (so an 8-chunk replay has
+    * >1 chunk files); docs 1 and 20 share their text. */
+  private def writeDocs(): String = {
+    val sp = spark; import sp.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("replayspec").toString
+    val dup = "exact duplicate text that will appear again much later"
+    ((1L, dup) +: (2L to 19L).map(i =>
+      (i, s"filler document number $i with its own distinct words $i$i $i$i$i")) :+ (20L, dup))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  /** The dir `graft.Scratch.tempDir` creates its temp dirs in. */
+  private lazy val scratchRoot: java.io.File = {
+    val probe = graft.Scratch.tempDir("graft-scratch-root")
+    java.nio.file.Files.delete(probe)
+    probe.getParent.toFile
+  }
+
+  private def scratchDirs(prefix: String): Set[String] =
+    Option(scratchRoot.list()).toSet.flatten.filter(_.startsWith(prefix))
 
   test("st01 emits a funnel row for a signup that is the LAST event in the stream") {
     // user 10: full conversion well inside the corpus; user 20: signs up
@@ -164,13 +188,13 @@ class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
       (3L, w1, 10L, "click", 1.0)))
     def run(store: Option[String]) = (
       StreamReplay.replayRaw(spark, dir, OutputMode.Complete(),
-          ds => EventStreams.cohortCounts(ds.filter(_.user_id >= 0L)),
+          Events(ds => EventStreams.cohortCounts(ds.filter(_.user_id >= 0L))),
           stateStore = store)
         .df.orderBy(col("cohort_week"), col("k")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq,
       {
         val r = StreamReplay.replayRaw(spark, dir, OutputMode.Append(),
-          ds => EventStreams.windowedCounts(ds.toDF()), stateStore = store)
+          Events(ds => EventStreams.windowedCounts(ds.toDF())), stateStore = store)
         r.df.filter(col("bucket_start") <= timestamp_millis(lit(r.maxTs)))
           .select(unix_timestamp(col("bucket_start")), col("event_type"),
             col("n"), col("total_value"))
@@ -208,7 +232,7 @@ class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
       (7L, ts("2026-01-01 09:30:00"), 20L, "view", 1.0)))
     def sessions(chunks: Int): (Seq[(Long, Long, Double, Long)], Long) = {
       val r = StreamReplay.replayRaw(spark, dir, OutputMode.Append(),
-        ds => EventStreams.sessionize(ds).toDF(), chunks = chunks)
+        Events(ds => EventStreams.sessionize(ds).toDF()), chunks = chunks)
       // time-ranged chunking must NEVER make a row watermark-late — the
       // invariant the multi-batch staging's hash-parity claim rests on
       assert(r.lateDropped === 0L,
@@ -271,8 +295,8 @@ class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
         org.apache.spark.sql.functions.max(col("ts"))).head()
     val spanMin = (mm.getTimestamp(1).getTime - mm.getTimestamp(0).getTime) / 60000L + 11L
     val r = StreamReplay.replayRaw(spark, dir, OutputMode.Append(),
-      ds => EventStreams.dedupeStream(ds.toDF(), watermark = s"$spanMin minutes"),
-      ticks = false, stageCopies = 2, copiesAsBatches = true)
+      Events(ds => EventStreams.dedupeStream(ds.toDF(), watermark = s"$spanMin minutes"),
+        ticks = false), stageCopies = 2, copiesAsBatches = true)
     assert(r.batches >= 2, s"expected the copies in separate batches, got ${r.batches}")
     assert(r.dupDropped === 3L,
       "each of the 3 re-sent ids must be dropped by a cross-batch state hit")
@@ -314,9 +338,9 @@ class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
     val cust = graft.Tables.customer(spark, dir)
     val r = StreamReplay.replayRaw(spark, dir, OutputMode.Append(),
-      ds => ds.toDF().join(broadcast(cust), col("user_id") === col("c_custkey"))
-        .select(col("event_id"), col("c_mktsegment")),
-      ticks = false, chunks = 4)
+      Events(ds => ds.toDF().join(broadcast(cust), col("user_id") === col("c_custkey"))
+        .select(col("event_id"), col("c_mktsegment")), ticks = false),
+      chunks = 4)
     assert(r.batches >= 4, s"expected one micro-batch per chunk, got ${r.batches}")
     assert(r.lateDropped === 0) // stateless join: nothing is ever late
     val got = r.df.orderBy(col("event_id")).collect()
@@ -338,8 +362,8 @@ class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
     })
     val out = java.nio.file.Files.createTempDirectory("st09spec").toString
     val r = StreamReplay.replayRaw(spark, dir, OutputMode.Append(),
-      ds => EventStreams.windowedCounts(ds.toDF()),
-      chunks = 4, parquetSinkDir = Some(out))
+      Events(ds => EventStreams.windowedCounts(ds.toDF())), chunks = 4,
+      sink = Sink.ForeachBatch(EventStreams.writeBatchIdempotent(_, _, out)))
     assert(r.batches >= 4)
     val once = spark.read.parquet(out)
     // watermark advances BETWEEN batches, so windows must have closed in
@@ -369,13 +393,7 @@ class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, "events.parquet", "part-99999-corrupt.parquet"),
       "not a parquet file".getBytes("UTF-8"))
-    val root = {
-      val probe = graft.Scratch.tempDir("graft-scratch-root")
-      java.nio.file.Files.delete(probe)
-      probe.getParent.toFile
-    }
-    def targets(entry: String): Set[String] =
-      Option(root.list()).toSet.flatten.filter(_.startsWith(s"graft-$entry-target"))
+    def targets(entry: String): Set[String] = scratchDirs(s"graft-$entry-target")
     Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)](
       "st20" -> StreamReplay.st20_time_travel_read,
       "st21" -> StreamReplay.st21_cdc_apply_pruned,
@@ -386,5 +404,40 @@ class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(targets(entry) -- before === Set.empty[String],
         s"$entry leaked its scratch target dir")
     }
+  }
+
+  test("documents replay: a corrupt part file or an empty table dir leaves no scratch dir") {
+    // the corrupt file sorts after the good one, so schema inference
+    // succeeds and the chunk-staging scan is what throws
+    val dir = writeDocs()
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(dir, "documents.parquet", "part-99999-corrupt.parquet"),
+      "not a parquet file".getBytes("UTF-8"))
+    // an empty table dir fails the harness's own file-listing check
+    val empty = java.nio.file.Files.createTempDirectory("replayspec")
+    java.nio.file.Files.createDirectory(empty.resolve("documents.parquet"))
+    val before = scratchDirs("graft")
+    intercept[Exception](StreamReplay.st16b_neardup_multibatch(spark, dir))
+    assert(scratchDirs("graft") -- before === Set.empty[String],
+      "st16b leaked a scratch dir")
+    intercept[IllegalArgumentException](StreamReplay.st16_neardup_ingest(spark, empty.toString))
+    assert(scratchDirs("graft") -- before === Set.empty[String],
+      "st16 leaked a scratch dir on an empty table")
+  }
+
+  test("settle telemetry: st18 settles through the awaitRows loop, st16 does not") {
+    // graft.Bench's queries_settle field reads settle_signal off lastFloor
+    val dir = writeDocs()
+    val st18 = StreamReplay.st18_neardup_ingest_ttl(spark, dir).collect()
+    val floor18 = StreamReplay.lastFloor.get()
+    assert(Set(0.0, 1.0, 2.0).contains(floor18("settle_signal")), floor18)
+    assert(floor18.contains("settle_count_jobs") && floor18.contains("poll_sleep_sec"))
+    val st16 = StreamReplay.st16_neardup_ingest(spark, dir).collect()
+    val floor16 = StreamReplay.lastFloor.get()
+    assert(!(floor16 eq floor18) && floor16.contains("total_sec"))
+    assert(floor16.get("settle_signal").forall(_ == -1.0), floor16)
+    // same gate, same flags: doc 20 repeats doc 1
+    assert(st18.toSeq === st16.toSeq)
+    assert(st16.map(r => (r.getLong(0), r.getLong(1))).filter(_._2 == 1L).toSeq === Seq((20L, 1L)))
   }
 }
